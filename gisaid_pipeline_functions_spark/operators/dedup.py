@@ -862,19 +862,20 @@ def prefix_filter_pairs(tokens: DataFrame, threshold: float) -> DataFrame:
         )
         .select("id", "sz", "pos", F.col("t.h").alias("h"))
     )
-    # r17 (guide §2.4/§3): candidates come from a per-prefix-token bucket
-    # groupBy + in-row ordered pair generation (the lsh_candidate_pairs
-    # pattern), NOT the former ``prefixes ⋈ prefixes`` merge self-join on
-    # ``h``. The self-join evaluated the whole tok→doc_freq→rank→prefix
-    # pipeline once per side; a bucket holds exactly the docs whose
-    # prefix contains token ``h`` (one entry per doc — ``tok`` is
-    # distinct per (id, h)), sorted by struct order = (id, sz, pos) =
-    # ascending id since ids are unique, so (mem[i], mem[j]) for i < j
-    # is exactly the old ``pa.id < pb.id`` condition on the same
-    # collisions, per token, filters included. Prefix tokens are the
+    # Candidates come from a per-prefix-token bucket groupBy + in-row
+    # ordered pair generation (the lsh_candidate_pairs pattern), not a
+    # ``prefixes ⋈ prefixes`` self-join on ``h``, which would evaluate
+    # the whole tok→doc_freq→rank→prefix pipeline once per side. A bucket
+    # holds exactly the docs whose prefix contains token ``h`` (one entry
+    # per doc — ``tok`` is distinct per (id, h)), sorted by struct order
+    # = (id, sz, pos) = ascending id since ids are unique, so
+    # (mem[i], mem[j]) for i < j is the ``pa.id < pb.id`` condition on
+    # the same collisions, per token, filters included. Prefix tokens are the
     # RAREST tokens of each doc, so buckets are small by construction; a
-    # hot token is chunked by the r18 ``bucket_pair_rows`` guard, and the
-    # two-step explode keeps per-row memory O(min(bucket, cap)).
+    # hot token is chunked by the ``bucket_pair_rows`` guard. Per-row
+    # memory is still O(bucket): every exploded left row carries the
+    # bucket's full member array; the cap bounds only the left positions
+    # one chunk row explodes.
     tau = F.lit(float(threshold))
     pbuckets = (
         prefixes.groupBy("h")

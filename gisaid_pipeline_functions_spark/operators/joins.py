@@ -135,20 +135,20 @@ def edit_distance_one_pairs(df: DataFrame, col: str) -> DataFrame:
     variant collisions are ed=2 shift pairs; filtering first cut the
     dedup shuffle ~4×).
 
-    r17 (guide §2.4/§3): pairs come from a per-variant bucket groupBy +
-    in-row ordered pair generation (the ``lsh_candidate_pairs``
-    pattern), NOT the former ``variants ⋈ variants`` self-join on ``v``.
-    The self-join evaluated the name→distinct→explode pipeline once per
-    side (r17 final-plan audit: 3 parquet scans, only 1 ReusedExchange)
-    and let the static planner BROADCAST one side — a frame that grows
-    with the corpus, the r4 anti-pattern. Bucket members are distinct
-    strings (``array_union`` dedups each name's variant set, so a name
-    contributes each ``v`` at most once), and ``array_sort`` uses the
-    same binary string ordering as the old ``va.s < vb.s`` predicate, so
-    (ss[i], ss[j]) for i < j is exactly the old pair multiset, verify
-    included. The two-step explode keeps per-row memory
-    O(min(bucket, cap)); a degenerate hot variant is chunked by the r18
-    ``bucket_pair_rows`` guard (see its docstring in operators/dedup.py).
+    Pairs come from a per-variant bucket groupBy + in-row ordered pair
+    generation (the ``lsh_candidate_pairs`` pattern), not a
+    ``variants ⋈ variants`` self-join on ``v``: a self-join evaluates the
+    name→distinct→explode pipeline once per side and lets the static
+    planner BROADCAST one side — a frame that grows with the corpus.
+    Bucket members are distinct strings (``array_union`` dedups each
+    name's variant set, so a name contributes each ``v`` at most once),
+    and ``array_sort`` uses binary string ordering, so (ss[i], ss[j]) for
+    i < j is the pair multiset of a ``va.s < vb.s`` self-join, verify
+    included. Per-row memory is O(bucket): every exploded left row,
+    chunked or not, carries the bucket's full member array; a degenerate
+    hot variant is chunked by the ``bucket_pair_rows`` guard, which
+    bounds each row's left positions to the cap but not the array it
+    carries (see its docstring in operators/dedup.py).
     """
     names = df.select(F.col(col).cast("string").alias("s")).distinct()
     s = F.col("s")

@@ -10,10 +10,15 @@ engines can't flip a rank or a threshold.
 Scale paths:
 - brute-force top-k: queries × corpus join — correct baseline; viable when
   one side is small enough to broadcast (queries usually are).
-- IVF (probe=1): partition the corpus by a coarse quantizer (here: the
-  given label as the cell id, centroids computed per cell), route each
-  query to its nearest centroid, search only that cell — the join key
-  becomes (cell), turning an n×m cross join into per-cell joins.
+- IVF (probe=1..n): partition the corpus by a coarse quantizer (the
+  given label as the cell id with per-cell mean centroids, or a trained
+  k-means quantizer), route each query to its nearest ``probe``
+  centroids, search only those cells — the join key becomes (cell),
+  turning an n×m cross join into per-cell joins.
+
+Every online search (``ivf_topk``, ``pq_adc_topk``, ``ivfpq_adc_topk``)
+is the matching index search over its own build: one read path per
+index, and one ADC scorer (``_adc_topk``) behind both PQ searches.
 """
 
 from __future__ import annotations
@@ -59,6 +64,20 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     a, b = _to_double(a), _to_double(b)
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def _d2(a: Column, b: Column) -> Column:
+    """Squared L2 as a left fold rounded to 6dp — the lattice every
+    assignment, routing step and ADC LUT ranks on (engines may sum in
+    different orders; the round keeps their picks equal)."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
+    )
 
 
 def brute_force_topk(
@@ -214,41 +233,43 @@ def ivf_topk(
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 3,
+    probes: int = 1,
 ) -> DataFrame:
-    """IVF probe=1: route each query to its nearest centroid, then exact
-    top-k within that cell only."""
-    from pyspark.sql import Window
+    """IVF over label cells — index search (``ivf_index_topk``) over its
+    own build: the per-label mean centroids (``label_centroids``) and the
+    postings ``(vec_id, label AS cell)``. Each query routes to its
+    ``probes`` nearest centroids by rounded cosine, then exact top-k
+    among those cells' members, ranked globally per query. ``probes`` > 1
+    is the recall knob: quantization error near cell boundaries is the
+    probe=1 failure mode, and cost grows with probes/n_cells of the
+    corpus, still never a full scan."""
+    cents = label_centroids(corpus, label_col, vec_col).select(
+        "cell", F.col("centroid").alias("c")
+    )
+    postings = corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(label_col).alias("cell")
+    )
+    return ivf_index_topk(
+        cents, postings, corpus, queries, id_col, vec_col, k, probe=probes
+    )
 
-    cents = label_centroids(corpus, label_col, vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    routed = q.join(F.broadcast(cents)).select(
-        "query_id",
-        "qvec",
-        "cell",
-        F.round(cosine(F.col("qvec"), F.col("centroid")), 6).alias("ccos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    assigned = (
-        routed.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "qvec", "cell")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        F.col(label_col).alias("cell"),
-    )
-    scored = c.join(F.broadcast(assigned), "cell").filter(
-        F.col("cand_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "cand_id",
-        F.col("cell"),
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+
+def _argmin_cell(ca: Column) -> Column:
+    """The ``(dist, cell)`` struct of the entry of ``ca`` — an array of
+    ``(cell, c)`` centroid structs — nearest to the row's ``v`` by
+    ``_d2``. ``array_sort`` on structs orders by field position, so the
+    pick is (dist asc, cell asc): cell id breaks distance ties."""
+    return F.element_at(
+        F.array_sort(
+            F.transform(
+                ca,
+                lambda s: F.struct(
+                    _d2(F.col("v"), s["c"]).alias("dist"),
+                    s["cell"].alias("cell"),
+                ),
+            )
+        ),
+        1,
     )
 
 
@@ -257,58 +278,16 @@ def _nearest_cell(base: DataFrame, cents: DataFrame) -> DataFrame:
     to 6dp before the argmin (sum-order differences between engines must
     not flip an assignment), ties broken by cell id.
 
-    Map-side argmin (r17): the centroid table collapses to ONE
-    broadcast array row and the per-vector argmin is an in-row
-    ``array_sort`` over ``(dist, cell)`` structs — ``array_sort`` on
-    structs orders by field position, so (dist asc, cell asc) is
-    EXACTLY the old ``row_number() over (dist, cell)`` tie-break and
-    the picked row is value-identical (the dist expression itself is
-    unchanged: same zip_with/aggregate fold, same 6dp round). The old
-    shape joined base × k centroid rows and ran a vec_id window over
-    the expansion — even with WindowGroupLimit's partial pass that
-    sorts N·k rows per partition and shuffles one row per vector PER
-    ASSIGNMENT PASS (every Lloyd iteration of every train). This shape
-    evaluates the same N·k distance folds but sorts only k-element
-    in-row arrays and shuffles NOTHING — assignment fuses into the
-    consumer's map stage (guide §2.4: remove shuffles outright).
-    Measured (interleaved A/B/A/B min-of-3, local[32], sf0.1, together
-    with the r17 ADC pivot/one-pass-recompute changes that share the
-    transit set): sim_ivf_learned 2.74 → 2.24 s (0.82×), sim_semdedup
-    5.14 → 4.73 (0.92×), sim_incremental_ivf 2.40 → 2.21 (0.92×),
-    sim_pq_adc_topk 3.65 → 3.27 (0.90×); the rest of the family within
-    ±2% — at toy scale these shapes are job-latency-bound, the win is
-    the per-pass Exchange+double-sort that no longer exists (at corpus
-    scale that is one shuffled row per vector per Lloyd pass plus an
-    N·k-row sort, every iteration). Empty-``cents`` input would
-    yield a NULL pick instead of the old empty join (unreachable from
-    every registered query: Lloyd init takes k≥1 smallest ids of a
-    non-empty corpus and persisted centroid tables are non-empty by
-    construction)."""
+    The centroid table collapses to ONE broadcast array row and the
+    argmin is in-row (``_argmin_cell``): no Exchange, no window, so the
+    assignment fuses into the consumer's map stage. Empty ``cents``
+    would yield a NULL pick; every caller passes a non-empty table
+    (Lloyd init takes the k≥1 smallest ids of a non-empty corpus, and
+    persisted centroid tables are non-empty by construction)."""
     ca = cents.agg(F.collect_list(F.struct("cell", "c")).alias("_ca"))
-    dist_of = lambda s: F.round(  # noqa: E731
-        F.aggregate(
-            F.zip_with(
-                F.col("v"), s["c"], lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    picked = F.element_at(
-        F.array_sort(
-            F.transform(
-                F.col("_ca"),
-                lambda s: F.struct(
-                    dist_of(s).alias("dist"), s["cell"].alias("cell")
-                ),
-            )
-        ),
-        1,
-    )
     return (
         base.crossJoin(F.broadcast(ca))
-        .select("vec_id", "v", picked.alias("_p"))
+        .select("vec_id", "v", _argmin_cell(F.col("_ca")).alias("_p"))
         .select(
             "vec_id",
             "v",
@@ -414,39 +393,18 @@ def _nearest_cell_per_subspace(
     per-subspace centroid tables collapse to m broadcast array rows
     (one per subspace, via a broadcast hash join on ``subspace`` instead
     of ``_nearest_cell``'s one-row crossJoin) and each slice row argmins
-    over ITS subspace's array with the identical in-row ``array_sort``
-    over ``(dist, cell)`` structs — the same zip_with/aggregate squared-
-    L2 fold rounded to 6dp, the same (dist asc, cell asc) tie-break — so
-    every per-row pick is bit-identical to running ``_nearest_cell``
-    once per subspace. Still zero Exchange, zero Window: the join build
-    side is m tiny array rows."""
+    over ITS subspace's array with the same ``_argmin_cell`` — so every
+    per-row pick is bit-identical to running ``_nearest_cell`` once per
+    subspace. Still zero Exchange, zero Window: the join build side is
+    m tiny array rows."""
     ca = cents.groupBy("subspace").agg(
         F.collect_list(F.struct("cell", "c")).alias("_ca")
     )
-    dist_of = lambda s: F.round(  # noqa: E731
-        F.aggregate(
-            F.zip_with(
-                F.col("v"), s["c"], lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    picked = F.element_at(
-        F.array_sort(
-            F.transform(
-                F.col("_ca"),
-                lambda s: F.struct(
-                    dist_of(s).alias("dist"), s["cell"].alias("cell")
-                ),
-            )
-        ),
-        1,
-    )
     return (
         slices.join(F.broadcast(ca), "subspace")
-        .select("subspace", "vec_id", "v", picked.alias("_p"))
+        .select(
+            "subspace", "vec_id", "v", _argmin_cell(F.col("_ca")).alias("_p")
+        )
         .select(
             "subspace",
             "vec_id",
@@ -684,15 +642,13 @@ def ivf_index_topk(
     """Search a persisted ``(centroids, postings)`` IVF index — the
     read path after any number of ``apply_ivf_index`` appends: route
     each query to its ``probe`` nearest FROZEN centroids by rounded
-    cosine (the same routing rule as ``ivf_topk``; probe>1 is the
-    recall knob ``ivf_topk_multiprobe`` provides for label cells),
-    then exact top-k among the probed cells' postings only, vectors
-    fetched by posting id. The final rank is GLOBAL per query across
-    probed cells (a posting lives in exactly one cell, so no
-    candidate dedup is needed).
+    cosine (``ivf_topk`` is this search over label-mean centroids;
+    probe>1 is the recall knob), then exact top-k among the probed
+    cells' postings only, vectors fetched by posting id. The final rank
+    is GLOBAL per query across probed cells (a posting lives in exactly
+    one cell, so no candidate dedup is needed).
 
-    Differs from ``ivf_topk`` exactly where a persisted index should:
-    routing uses the frozen quantizer centroids, NOT per-cell means
+    Routing uses the frozen quantizer centroids, NOT per-cell means
     recomputed from the current postings (recomputed means drift as
     deltas append; the frozen quantizer is what every posting was
     assigned under, so routing and postings stay consistent).
@@ -703,8 +659,7 @@ def ivf_index_topk(
     a vector fetch, of cells the query doesn't probe), and only the
     surviving candidate rows join the vector store on id
     (co-partitionable by id at scale; hint-free — both sides grow with
-    the corpus, AQE decides). ADVICE r14: the previous plan fetched
-    vectors for ALL postings before the probed-cell filter."""
+    the corpus, AQE decides)."""
     from pyspark.sql import Window
 
     q = queries.select(
@@ -964,55 +919,6 @@ def sq8_index_topk(
     ).filter(F.col("rank") <= topk)
 
 
-def ivf_topk_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    k: int = 3,
-    probes: int = 2,
-) -> DataFrame:
-    """IVF with multi-probe: search the ``probes`` nearest cells instead
-    of one — the standard recall knob (quantization error near cell
-    boundaries is the probe=1 failure mode). Cost scales with
-    probes/n_cells of the corpus, still never a full scan."""
-    from pyspark.sql import Window
-
-    cents = label_centroids(corpus, label_col, vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    routed = q.join(F.broadcast(cents)).select(
-        "query_id",
-        "qvec",
-        "cell",
-        F.round(cosine(F.col("qvec"), F.col("centroid")), 6).alias("ccos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    assigned = (
-        routed.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= probes)
-        .select("query_id", "qvec", "cell")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        F.col(label_col).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(assigned), "cell")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
 def pq_codes(
     corpus: DataFrame,
     m: int = 2,
@@ -1056,74 +962,60 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     topk: int = 3,
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes — the codes USED:
-    per query, a distance look-up table (k entries per subspace) against
-    the recomputed subspace centroids; a candidate's approximate distance
-    is the SUM of its code's LUT entries, never a touch of its raw vector.
+    """Asymmetric-distance (ADC) top-k over PQ codes — index search
+    (``pq_index_adc_topk``) over its own build: train the codes
+    (``pq_codes``), take as codebooks the per-subspace means of that
+    final assignment (``_final_assignment_means``), and score every
+    candidate as the sum of its code's LUT entries — never a touch of
+    its raw vector.
 
     Scale shape: the corpus side streams only its m-integer code row;
     the LUTs (queries × m × k rows) BROADCAST, so scoring is m map-side
     hash-join probes plus a per-query top-k window (WindowGroupLimit) —
-    no shuffle of vectors, no pairwise vector math. Centroids are
-    recomputed from the final assignment (per-dim 6dp-rounded means),
-    mirroring the learned-IVF convention, so the oracle replays them."""
-    from pyspark.sql import Window
-
-    # materialize the codes ONCE: they are referenced 2m times below
-    # (wide join + centroid recompute per subspace), and each reference
-    # would otherwise re-execute the full two-codebook Lloyd training —
-    # the codes table is m rows of 3 ints per vector, the cheapest thing
-    # in the whole plan to pin (measured 34.5 s → re-execution collapsed)
+    no shuffle of vectors, no pairwise vector math."""
+    # the codes feed the means pass and the wide pivot, and each
+    # reference would otherwise re-run the whole Lloyd training
     codes = pq_codes(
         corpus, m, sub_dim, k, iterations, id_col, vec_col
     ).localCheckpoint(eager=True)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
+    vecs = corpus.select(
+        F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
     )
-    # Wide code row via ONE conditional-aggregation pivot (r17): codes
-    # has exactly one row per (vec_id, subspace), so max(when(subspace=j,
-    # cell)) IS the subspace-j code — integer-exact, and one map-side-
-    # combinable exchange replaces the old m-filtered-scan + (m-1)
-    # vec_id self-join chain (each join an Exchange+Sort+SMJ; the codes
-    # table was scanned m times). Guide §2.4.
-    wide = codes.groupBy("vec_id").agg(
-        *[
-            F.max(F.when(F.col("subspace") == j, F.col("cell"))).alias(
-                f"c{j}"
+    codebooks = _final_assignment_means(vecs, codes, sub_dim)
+    return pq_index_adc_topk(
+        codebooks, codes, queries, m, sub_dim, id_col, vec_col, topk
+    )
+
+
+def _final_assignment_means(
+    vecs: DataFrame, codes: DataFrame, sub_dim: int
+) -> DataFrame:
+    """Codebooks recomputed from a FINAL assignment: per (subspace,
+    cell), the 6dp-rounded per-dim means of the member slices of
+    ``vecs`` ``(vec_id, v)`` under ``codes`` ``(vec_id, subspace,
+    cell)`` → ``(subspace, cell, cent)``. These are the means of the
+    final assignment (what Lloyd iteration it+1 would train), NOT the
+    generation the assignment ranked against; the oracle replays them
+    with the same cent CTEs. One ``vecs ⋈ codes`` pass covers all
+    subspaces, and the result (m·k·sub_dim doubles) is pinned because
+    each of the m LUT builds reads it."""
+    members = vecs.join(
+        codes.select("vec_id", "subspace", "cell"), "vec_id"
+    ).select(
+        "subspace",
+        "cell",
+        F.posexplode(
+            F.slice(
+                F.col("v"),
+                (F.col("subspace") * sub_dim + 1).cast("int"),
+                sub_dim,
             )
-            for j in range(m)
-        ]
+        ).alias("pos", "x"),
     )
-    # Centroid recompute for ALL subspaces in ONE corpus ⋈ codes pass
-    # (r17): the old loop joined the sliced corpus to the subspace-j
-    # codes and exploded it once PER SUBSPACE — m corpus scans, m joins,
-    # m aggregation trees (each LUT's broadcast build re-executed its
-    # own). Same groups, same member values, same round(avg, 6): group
-    # (subspace=j, cell, pos) holds exactly the old (c_j, pos) members.
-    # The tiny result (m·k·sub_dim doubles) is pinned so the m per-
-    # subspace LUT builds read it instead of replaying the corpus pass.
-    sub_all = (
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            _to_double(F.col(vec_col)).alias("v"),
-        )
-        .join(codes.select("vec_id", "subspace", "cell"), "vec_id")
-        .select(
-            "subspace",
-            "cell",
-            F.posexplode(
-                F.slice(
-                    F.col("v"),
-                    (F.col("subspace") * sub_dim + 1).cast("int"),
-                    sub_dim,
-                )
-            ).alias("pos", "x"),
-        )
-    )
-    per_dim = sub_all.groupBy("subspace", "cell", "pos").agg(
+    per_dim = members.groupBy("subspace", "cell", "pos").agg(
         F.round(F.avg("x"), 6).alias("mu")
     )
-    cents_all = (
+    return (
         per_dim.groupBy("subspace", "cell")
         .agg(
             F.transform(
@@ -1133,41 +1025,6 @@ def pq_adc_topk(
         )
         .localCheckpoint(eager=True)
     )
-    luts = []
-    for j in range(m):
-        cents = cents_all.filter(F.col("subspace") == j).select(
-            F.col("cell").alias(f"c{j}"), "cent"
-        )
-        qsub = q.select(
-            "query_id", F.slice(F.col("qv"), j * sub_dim + 1, sub_dim).alias("qs")
-        )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        luts.append(
-            qsub.join(F.broadcast(cents)).select(
-                "query_id", f"c{j}", d2.alias(f"d{j}")
-            )
-        )
-    scored = wide
-    for j, lut in enumerate(luts):
-        keys = [f"c{j}"] if j == 0 else ["query_id", f"c{j}"]
-        scored = scored.join(F.broadcast(lut), keys)
-    adc = F.round(_adc_fold(m), 6)
-    scored = scored.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id", F.col("vec_id").alias("cand_id"), adc.alias("adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("cand_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= topk)
 
 
 def pq_codebooks(
@@ -1287,67 +1144,91 @@ def pq_index_adc_topk(
     topk: int = 3,
 ) -> DataFrame:
     """Search a persisted ``(codebooks, codes)`` PQ index — the read
-    path after any number of ``apply_pq_index`` appends: per-query
-    distance LUTs against the FROZEN codebook centroids (k entries per
-    subspace), candidate distance = sum of its stored code's LUT
-    entries, global top-k per query under (adc asc, id asc).
+    path after any number of ``apply_pq_index`` appends, and the search
+    ``pq_adc_topk`` runs over its own build: per-query distance LUTs
+    against the codebook centroids (k entries per subspace), candidate
+    distance = sum of its stored code's LUT entries, global top-k per
+    query under (adc asc, id asc).
 
-    Differs from ``pq_adc_topk`` exactly where a persisted index
-    should (the ``ivf_index_topk`` convention): LUTs use the frozen
-    quantizer the stored codes were assigned under — never centroids
-    recomputed from current assignments, which drift as deltas append.
+    LUTs use the frozen quantizer the stored codes were assigned under
+    — never centroids recomputed from current assignments, which drift
+    as deltas append.
 
     100 TB: the corpus side streams m ints per vector (the wide code
     row — never a raw vector); LUTs are queries × m·k rows and
     BROADCAST, so scoring is m map-side hash-join probes plus a
     per-query top-k window (WindowGroupLimit)."""
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
     )
-    # Wide code row via ONE conditional-aggregation pivot (r17): codes
-    # is one row per (vec_id, subspace), so max(when(...)) is exact; one
-    # exchange replaces the (m-1) vec_id self-joins AND the persisted
-    # code table is scanned once instead of m times (guide §2.4).
+    return _adc_topk(
+        codes.select("vec_id", "subspace", F.col("cell").alias("code")),
+        codebooks.select("subspace", F.col("cell").alias("code"), "cent"),
+        q,
+        [],
+        m,
+        sub_dim,
+        topk,
+    )
+
+
+def _adc_topk(
+    codes: DataFrame,
+    codebooks: DataFrame,
+    qrows: DataFrame,
+    keys: list[str],
+    m: int,
+    sub_dim: int,
+    topk: int,
+) -> DataFrame:
+    """The ADC scorer behind both PQ index searches. ``codes`` is long
+    form ``(vec_id, *keys, subspace, code)``, ``codebooks`` is
+    ``(subspace, code, cent)`` and ``qrows`` is ``(query_id, *keys,
+    qv)``, the query-side vector each subspace LUT slices. ``keys`` are
+    extra equi-join keys between candidates and LUT rows: none for PQ;
+    ``["cell"]`` for IVF-PQ, whose ``qrows`` hold one residual per
+    probed cell, so the LUT join both picks the cell-dependent LUT and
+    drops every candidate outside the query's probed cells.
+
+    The wide code row is ONE conditional-aggregation pivot: codes hold
+    one row per (vec_id, subspace) with constant ``keys`` per vec_id, so
+    ``max`` recovers each exactly. The m LUTs broadcast into a join
+    chain, the distance is the ``_adc_fold`` over the LUT entries, and
+    the rank is (adc asc, cand_id asc) per query."""
+    from pyspark.sql import Window
+
     wide = codes.groupBy("vec_id").agg(
+        *[F.max(c).alias(c) for c in keys],
         *[
-            F.max(F.when(F.col("subspace") == j, F.col("cell"))).alias(
+            F.max(F.when(F.col("subspace") == j, F.col("code"))).alias(
                 f"c{j}"
             )
             for j in range(m)
-        ]
+        ],
     )
-    luts = []
+    scored = wide
     for j in range(m):
         cents = codebooks.filter(F.col("subspace") == j).select(
-            F.col("cell").alias(f"c{j}"), F.col("cent")
+            F.col("code").alias(f"c{j}"), "cent"
         )
-        qsub = q.select(
-            "query_id", F.slice(F.col("qv"), j * sub_dim + 1, sub_dim).alias("qs")
+        qsub = qrows.select(
+            "query_id",
+            *keys,
+            F.slice(F.col("qv"), j * sub_dim + 1, sub_dim).alias("qs"),
         )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
+        lut = qsub.join(F.broadcast(cents)).select(
+            "query_id",
+            *keys,
+            f"c{j}",
+            _d2(F.col("qs"), F.col("cent")).alias(f"d{j}"),
         )
-        luts.append(
-            qsub.join(F.broadcast(cents)).select(
-                "query_id", f"c{j}", d2.alias(f"d{j}")
-            )
-        )
-    scored = wide
-    for j, lut in enumerate(luts):
-        keys = [f"c{j}"] if j == 0 else ["query_id", f"c{j}"]
-        scored = scored.join(F.broadcast(lut), keys)
-    adc = F.round(_adc_fold(m), 6)
+        on = [*keys, f"c{j}"] if j == 0 else ["query_id", *keys, f"c{j}"]
+        scored = scored.join(F.broadcast(lut), on)
     scored = scored.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id", F.col("vec_id").alias("cand_id"), adc.alias("adc")
+        "query_id",
+        F.col("vec_id").alias("cand_id"),
+        *keys,
+        F.round(_adc_fold(m), 6).alias("adc"),
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("cand_id"))
     return scored.withColumn(
@@ -1942,29 +1823,14 @@ def sign_bit_ann(
     )
 
 
-def _ivfpq_route_residuals(
-    corpus: DataFrame,
-    k_coarse: int,
-    iterations: int,
-    id_col: str,
-    vec_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared IVF-PQ front end: train the coarse quantizer, route every
-    vector, re-attach the k-row centroid table (broadcast; the
-    ``_nearest_cell`` contract drops the centroid array) and form the
-    residual ``v − c_cell``. Returns ``(coarse, routed)`` with routed =
-    ``(vec_id, cell, rv)``; BOTH are eagerly localCheckpoint-ed — the
-    coarse table tops the iterative Lloyd tree and the routed frame
-    feeds m downstream Lloyd trains plus the code emission (the
-    iterative-state multi-consumer rule)."""
-    base = corpus.select(
-        F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
-    )
-    coarse = kmeans_centroids(
-        corpus, k=k_coarse, iterations=iterations, id_col=id_col,
-        vec_col=vec_col,
-    ).localCheckpoint(eager=True)
-    routed = (
+def _route_residuals(base: DataFrame, coarse: DataFrame) -> DataFrame:
+    """Route ``(vec_id, v)`` to its nearest coarse cell (the
+    ``_nearest_cell`` contract), re-attach the k-row centroid table
+    (broadcast; ``_nearest_cell`` drops the centroid array) and form the
+    residual ``v − c_cell`` → ``(vec_id, cell, rv)``. Eagerly pinned:
+    every caller feeds it to m subspace trains or assignments plus the
+    cell re-attach (the iterative-state multi-consumer rule)."""
+    return (
         _nearest_cell(base, coarse)
         .select("vec_id", "cell", "v")
         .join(F.broadcast(coarse), "cell")
@@ -1977,7 +1843,28 @@ def _ivfpq_route_residuals(
         )
         .localCheckpoint(eager=True)
     )
-    return coarse, routed
+
+
+def _ivfpq_route_residuals(
+    corpus: DataFrame,
+    k_coarse: int,
+    iterations: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Shared IVF-PQ front end: train the coarse quantizer and route
+    every vector through ``_route_residuals``. Returns ``(coarse,
+    routed)`` with routed = ``(vec_id, cell, rv)``; the coarse table is
+    eagerly localCheckpoint-ed too, as it tops the iterative Lloyd tree
+    and feeds both the routing and the caller."""
+    base = corpus.select(
+        F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
+    )
+    coarse = kmeans_centroids(
+        corpus, k=k_coarse, iterations=iterations, id_col=id_col,
+        vec_col=vec_col,
+    ).localCheckpoint(eager=True)
+    return coarse, _route_residuals(base, coarse)
 
 
 def _ivfpq_subspace_codes(
@@ -2056,157 +1943,47 @@ def ivfpq_adc_topk(
     topk: int = 3,
     probe: int = 1,
 ) -> DataFrame:
-    """IVF-PQ search with asymmetric distance (the IndexIVFPQ read
-    path): route each query to its ``probe`` nearest coarse cells by
-    the SAME rounded-L2 argmin the corpus was assigned under, compute
-    the query's residual PER PROBED CELL (``q − c_cell`` — residual
-    LUTs are cell-dependent, the defining subtlety of IVF-PQ), build
-    the per-(query, cell, subspace) LUT against the residual
-    codebooks, and score only the probed cells' members: adc =
-    Σ_j LUT[cell, j, code_j]. Global (adc asc, id asc) top-k per
-    query across probed cells.
-
-    The coarse train and the corpus routing run ONCE and feed both the
-    encoder and the LUT recompute (the r15 restructure: calling the
-    encoder and then re-training coarse for routing executed the
-    whole coarse Lloyd twice — measured 6.5 s → 4.3 s min-of-2 at sf0.1).
+    """IVF-PQ search with asymmetric distance — index search
+    (``ivfpq_index_adc_topk``) over its own build: train the coarse
+    quantizer and route every vector once (``_ivfpq_route_residuals``),
+    train the residual codes (``_ivfpq_subspace_codes``), take as
+    residual codebooks the per-subspace means of that final assignment
+    (``_final_assignment_means``, the ``pq_adc_topk`` convention), then
+    search the codes with their coarse cells attached. Each query routes
+    to its ``probe`` nearest coarse cells, LUTs are per probed cell
+    (residual LUTs are cell-dependent), and the global (adc asc, id asc)
+    top-k per query spans the probed cells.
 
     100 TB: candidates stream (cell, m codes) per vector — the probed-
-    cell filter is the broadcast routing join, the LUTs (queries ×
-    probe × m × k_pq rows) broadcast, and no candidate's raw vector is
-    ever touched: the scan cost is probe/k_coarse of the CODE table,
-    the IVF pruning and the PQ constant-cost scoring composed."""
-    from pyspark.sql import Window
-
-    coarse, routed_corpus = _ivfpq_route_residuals(
+    cell filter is the broadcast LUT join, the LUTs (queries × probe ×
+    m × k_pq rows) broadcast, and no candidate's raw vector is ever
+    touched: the scan cost is probe/k_coarse of the CODE table, the IVF
+    pruning and the PQ constant-cost scoring composed."""
+    coarse, routed = _ivfpq_route_residuals(
         corpus, k_coarse, iterations, id_col, vec_col
     )
-    # the code table is referenced once per subspace in the wide join
-    # below AND its Lloyd trees are expensive — pin it
+    # the codes feed the means pass and the wide pivot, and each
+    # reference would otherwise re-run the residual Lloyd trains
     codes = _ivfpq_subspace_codes(
-        routed_corpus, m, sub_dim, k_pq, iterations
+        routed, m, sub_dim, k_pq, iterations
     ).localCheckpoint(eager=True)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
+    codebooks = _final_assignment_means(
+        routed.select("vec_id", F.col("rv").alias("v")),
+        codes.select("vec_id", "subspace", F.col("pq_cell").alias("cell")),
+        sub_dim,
+    ).select("subspace", F.col("cell").alias("pq_cell"), "cent")
+    return ivfpq_index_adc_topk(
+        coarse,
+        codebooks,
+        routed.select("vec_id", "cell").join(codes, "vec_id"),
+        queries,
+        m,
+        sub_dim,
+        id_col,
+        vec_col,
+        topk,
+        probe,
     )
-    qdist = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    wq = Window.partitionBy("query_id").orderBy("qd", "cell")
-    qrouted = (
-        q.join(F.broadcast(coarse))
-        .select(
-            "query_id",
-            "cell",
-            qdist.alias("qd"),
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: x - y).alias(
-                "qres"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= probe)
-        .select("query_id", "cell", "qres")
-    )
-    # Wide code row via ONE conditional-aggregation pivot + ONE join to
-    # re-attach the coarse cell (r17) — replaces the m-step vec_id join
-    # chain that scanned the pinned codes RDD m times (guide §2.4).
-    wide = routed_corpus.select("vec_id", "cell").join(
-        codes.groupBy("vec_id").agg(
-            *[
-                F.max(
-                    F.when(F.col("subspace") == j, F.col("pq_cell"))
-                ).alias(f"c{j}")
-                for j in range(m)
-            ]
-        ),
-        "vec_id",
-    )
-    # residual codebooks for the LUTs: per (subspace, pq_cell)
-    # 6dp-rounded means of the member residual slices — the
-    # ``pq_adc_topk`` recompute convention (means OF the final
-    # assignment, i.e. what generation it+1 would train; NOT the
-    # generation the assignment ranked against), which the oracle
-    # replays with the same cent CTEs as sim_pq_adc_topk. r17: ALL
-    # subspaces in one routed ⋈ codes pass (the old loop exploded the
-    # residual frame once per subspace — m scans, m joins, and each
-    # LUT's broadcast build re-executed its own aggregation tree);
-    # groups and member values are unchanged, and the tiny result
-    # (m·k·sub_dim doubles) is pinned for the m LUT builds.
-    sub_all = (
-        routed_corpus.select("vec_id", "rv")
-        .join(codes.select("vec_id", "subspace", "pq_cell"), "vec_id")
-        .select(
-            "subspace",
-            "pq_cell",
-            F.posexplode(
-                F.slice(
-                    F.col("rv"),
-                    (F.col("subspace") * sub_dim + 1).cast("int"),
-                    sub_dim,
-                )
-            ).alias("pos", "x"),
-        )
-    )
-    per_dim = sub_all.groupBy("subspace", "pq_cell", "pos").agg(
-        F.round(F.avg("x"), 6).alias("mu")
-    )
-    cents_all = (
-        per_dim.groupBy("subspace", "pq_cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                lambda s: s["mu"],
-            ).alias("cent")
-        )
-        .localCheckpoint(eager=True)
-    )
-    luts = []
-    for j in range(m):
-        cents = cents_all.filter(F.col("subspace") == j).select(
-            F.col("pq_cell").alias(f"c{j}"), "cent"
-        )
-        qsub = qrouted.select(
-            "query_id",
-            "cell",
-            F.slice(F.col("qres"), j * sub_dim + 1, sub_dim).alias("qs"),
-        )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        luts.append(
-            qsub.join(F.broadcast(cents)).select(
-                "query_id", "cell", f"c{j}", d2.alias(f"d{j}")
-            )
-        )
-    scored = wide  # (vec_id, cell, c0..c{m-1})
-    for j, lut in enumerate(luts):
-        keys = (
-            ["cell", f"c{j}"] if j == 0 else ["query_id", "cell", f"c{j}"]
-        )
-        scored = scored.join(F.broadcast(lut), keys)
-    adc = F.round(_adc_fold(m), 6)
-    scored = scored.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        "cell",
-        adc.alias("adc"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("cand_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= topk)
 
 
 def delete_from_vector_index(
@@ -2282,35 +2059,21 @@ def _assign_ivfpq_codes(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode vectors against a FROZEN IVF-PQ quantizer pair: route each
-    vector to its nearest coarse cell (rounded squared-L2, cell-id
-    tie-break — the ``_nearest_cell`` contract), form the residual
-    ``v − c_cell``, and assign every ``sub_dim``-wide residual slice to
-    its nearest frozen per-subspace codebook centroid → long form
-    ``(vec_id, cell, subspace, pq_cell)``.
+    vector and form its residual (``_route_residuals``), then assign
+    every ``sub_dim``-wide residual slice to its nearest frozen
+    per-subspace codebook centroid → long form ``(vec_id, cell,
+    subspace, pq_cell)``.
 
     Both quantizer tables broadcast (k_coarse rows + m·k_pq rows), so
     cost is rows × (k_coarse + m·k_pq) regardless of how much history
     the index holds — the persisted-index family's delta-cost
-    contract. The routed frame feeds m subspace assignments plus the
-    final cell re-attach, so it is eagerly pinned (re-running the
-    residual zip_with m+1 times otherwise)."""
+    contract."""
     base = df.select(
         F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
     )
-    routed = (
-        _nearest_cell(base, coarse)
-        .select("vec_id", "cell", "v")
-        .join(F.broadcast(coarse), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with(F.col("v"), F.col("c"), lambda x, y: x - y).alias(
-                "rv"
-            ),
-        )
-        .localCheckpoint(eager=True)
+    return _frozen_codes_on_routed(
+        _route_residuals(base, coarse), codebooks, m, sub_dim
     )
-    return _frozen_codes_on_routed(routed, codebooks, m, sub_dim)
 
 
 def build_ivfpq_index(
@@ -2407,20 +2170,18 @@ def ivfpq_index_adc_topk(
     probe: int = 1,
 ) -> DataFrame:
     """Search a persisted ``(coarse, codebooks, codes)`` IVF-PQ index —
-    the read path after any number of ``apply_ivfpq_index`` appends:
-    route each query to its ``probe`` nearest coarse cells by the SAME
-    rounded-L2 argmin the corpus was assigned under, compute the query
-    residual PER PROBED CELL (residual LUTs are cell-dependent — the
-    defining IVF-PQ subtlety), LUT against the FROZEN residual
-    codebooks, and score only the probed cells' stored codes: adc =
-    Σ_j LUT[cell, j, code_j]; global (adc asc, id asc) top-k per query
-    across probed cells.
+    the read path after any number of ``apply_ivfpq_index`` appends, and
+    the search ``ivfpq_adc_topk`` runs over its own build: route each
+    query to its ``probe`` nearest coarse cells by the SAME rounded-L2
+    the corpus was assigned under, compute the query residual PER
+    PROBED CELL (residual LUTs are cell-dependent — the defining IVF-PQ
+    subtlety), LUT against the residual codebooks, and score only the
+    probed cells' stored codes: adc = Σ_j LUT[cell, j, code_j]; global
+    (adc asc, id asc) top-k per query across probed cells.
 
-    Differs from ``ivfpq_adc_topk`` exactly where a persisted index
-    should (the ``pq_index_adc_topk`` / ``ivf_index_topk`` convention):
-    LUTs use the frozen quantizers the stored codes were assigned
-    under — never centroid means recomputed from current assignments,
-    which drift as deltas append.
+    LUTs use the frozen quantizers the stored codes were assigned under
+    — never centroid means recomputed from current assignments, which
+    drift as deltas append.
 
     100 TB: candidates stream (cell, m codes) per vector; the probed-
     cell pruning is the broadcast LUT join on cell (only probed cells
@@ -2432,82 +2193,29 @@ def ivfpq_index_adc_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
     )
-    qdist = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
     wq = Window.partitionBy("query_id").orderBy("qd", "cell")
     qrouted = (
         q.join(F.broadcast(coarse))
         .select(
             "query_id",
             "cell",
-            qdist.alias("qd"),
+            _d2(F.col("qv"), F.col("c")).alias("qd"),
             F.zip_with(F.col("qv"), F.col("c"), lambda x, y: x - y).alias(
                 "qres"
             ),
         )
         .withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= probe)
-        .select("query_id", "cell", "qres")
+        .select("query_id", "cell", F.col("qres").alias("qv"))
     )
-    # Wide code row via ONE conditional-aggregation pivot (r17): the
-    # stored codes are one row per (vec_id, subspace) with a constant
-    # coarse cell per vec_id, so max() recovers both exactly; one
-    # exchange replaces the (m-1) vec_id self-joins and the persisted
-    # code table is scanned once instead of m times (guide §2.4).
-    wide = codes.groupBy("vec_id").agg(
-        F.max("cell").alias("cell"),
-        *[
-            F.max(F.when(F.col("subspace") == j, F.col("pq_cell"))).alias(
-                f"c{j}"
-            )
-            for j in range(m)
-        ],
+    return _adc_topk(
+        codes.select(
+            "vec_id", "cell", "subspace", F.col("pq_cell").alias("code")
+        ),
+        codebooks.select("subspace", F.col("pq_cell").alias("code"), "cent"),
+        qrouted,
+        ["cell"],
+        m,
+        sub_dim,
+        topk,
     )
-    luts = []
-    for j in range(m):
-        cents = codebooks.filter(F.col("subspace") == j).select(
-            F.col("pq_cell").alias(f"c{j}"), F.col("cent")
-        )
-        qsub = qrouted.select(
-            "query_id",
-            "cell",
-            F.slice(F.col("qres"), j * sub_dim + 1, sub_dim).alias("qs"),
-        )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        luts.append(
-            qsub.join(F.broadcast(cents)).select(
-                "query_id", "cell", f"c{j}", d2.alias(f"d{j}")
-            )
-        )
-    scored = wide  # (vec_id, cell, c0..c{m-1})
-    for j, lut in enumerate(luts):
-        keys = (
-            ["cell", f"c{j}"] if j == 0 else ["query_id", "cell", f"c{j}"]
-        )
-        scored = scored.join(F.broadcast(lut), keys)
-    adc = F.round(_adc_fold(m), 6)
-    scored = scored.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        "cell",
-        adc.alias("adc"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("cand_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= topk)

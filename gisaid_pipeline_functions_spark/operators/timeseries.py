@@ -82,18 +82,6 @@ def with_week_labels(df: DataFrame, week_col: str = "week_start") -> DataFrame:
     )
 
 
-def pivot_wide(freq_long: DataFrame, key_col: str = "key") -> DataFrame:
-    """Sink-side pivot to the reference's wide codes×weeks table
-    (SURVEY §1.1.5). Only for small, end-of-plan results."""
-    labeled = with_week_labels(freq_long)
-    return (
-        labeled.groupBy(key_col)
-        .pivot("week_label")
-        .agg(F.first("freq"))
-        .na.fill(0)
-    )
-
-
 def weekly_combination_frequency(
     df: DataFrame, ts_col: str, items_col: str
 ) -> DataFrame:

@@ -28,16 +28,15 @@ def _with_approx_range_bucket(
 ) -> DataFrame:
     """Order-respecting range-bucket ids (`_bkt`) from ~n approximate
     quantile cuts, computed INLINE as a one-row ``percentile_approx``
-    aggregate broadcast back onto the rows — r18 (guide §2.4), replacing
-    the former EAGER ``df.stat.approxQuantile`` driver job shared by the
-    block-prefix family (paginate / global_rank / block_cumsum /
-    skyline_2d / budget_pack_walk).
+    aggregate broadcast back onto the rows, for the block-prefix family
+    (paginate / global_rank / block_cumsum / skyline_2d /
+    budget_pack_walk).
 
-    Why: the eager quantile job evaluated the caller's whole input
-    subtree once for the cuts and the main plan evaluated it AGAIN —
-    cross-job exchange reuse does not exist — so every consumer paid a
-    double subtree scan (~23 registered queries transit this family).
-    The inline aggregate consumes the SAME exchange the main plan uses
+    Why inline: an EAGER ``df.stat.approxQuantile`` job evaluates the
+    caller's whole input subtree once for the cuts and the main plan
+    evaluates it AGAIN — cross-job exchange reuse does not exist — so
+    every consumer would pay a double subtree scan (~23 registered
+    queries transit this family). The inline aggregate consumes the SAME exchange the main plan uses
     (runtime ReusedExchange), so the subtree is evaluated once; the cuts
     cross the plan as a single broadcast row.
 
@@ -45,21 +44,22 @@ def _with_approx_range_bucket(
     cut-independent: each composes exact per-bucket totals (the
     triangular broadcast prefix) with a within-bucket window over a
     total order, so ANY order-respecting bucketing yields the same rank/
-    cumsum/page/frontier. Cuts only steer balance. Determinism under
-    recomputation also holds: ``percentile_approx`` is a deterministic
-    aggregate of the data (unlike repartitionByRange's per-branch
-    sampling, the trap the old literal cuts existed to avoid), and the
-    broadcast is computed once per execution.
+    cumsum/page/frontier. Cuts only steer balance. They are NOT
+    deterministic under recomputation: ``percentile_approx`` merges GK
+    sketches, and the merged sketch depends on the order partial
+    aggregates arrive in. Both consumers agree on the cuts today only
+    because runtime ReusedExchange evaluates the cut subtree once and
+    broadcasts the one result to both; a plan that re-evaluated it
+    could hand the two consumers different cuts.
 
     ``null_bucket``: "min" -> NULL order keys get bucket -1 (ASC NULLS
     FIRST globally — paginate/global_rank/block_cumsum); "last" -> NULL
     keys get bucket size(cuts) (DESC NULLS LAST — budget_pack_walk);
-    "null" -> NULL propagates (skyline_2d joins drop NULL-x rows, as the
-    old raw bucket expression did). Non-numeric or n<=1 degrades to one
-    bucket exactly as the old ``except`` path did.
+    "null" -> NULL propagates (skyline_2d joins drop NULL-x rows).
+    Non-numeric or n<=1 degrades to one bucket.
 
-    ``inline_cuts=False`` keeps the r17 eager approxQuantile + literal
-    comparison-chain path. Measured reason for the escape (r18): the
+    ``inline_cuts=False`` takes the eager approxQuantile + literal
+    comparison-chain path instead. Why the escape exists: the
     runtime-array bucket expression is an INTERPRETED higher-order
     lambda (~n comparisons per row per consumer branch; the r9
     interpreted-HOF cost class), while literal cuts compile into a

@@ -1,10 +1,9 @@
-"""K5 — styled Excel heatmap sink (reference Time_Series.py:813–837).
+"""K5 — heatmap shading (reference Time_Series.py:813–837).
 
-Presentation, not engine: the reference collects the percentage pivot into
-pandas and writes a ``Styler.background_gradient`` .xlsx. Same here — the
-pivot is computed distributed, only the (small) wide table collects to the
-driver. openpyxl is not in this container, so the writer degrades to CSV
-with a warning instead of failing the pipeline.
+The reference collects the percentage pivot into pandas and writes a
+``Styler.background_gradient`` .xlsx. The painting is presentation, not
+engine; what the engine owns is the gradient's data contract, computed
+distributed on the long percentage table.
 """
 
 from __future__ import annotations
@@ -37,21 +36,3 @@ def gradient_shades(
     return pct_long.withColumn(
         "shade", F.concat(F.lit("q"), bucket.cast("string"))
     )
-
-
-def write_heatmap_xlsx(wide_pivot: DataFrame, path: str, cmap: str = "Reds") -> str:
-    """Collect the (sink-side, already-pivoted) table and write a styled
-    .xlsx; falls back to ``<path>.csv`` when openpyxl is unavailable.
-    Returns the path actually written."""
-    pdf = wide_pivot.toPandas()
-    value_cols = [c for c in pdf.columns if c != pdf.columns[0]]
-    try:
-        import openpyxl  # noqa: F401
-
-        styler = pdf.style.background_gradient(cmap=cmap, subset=value_cols)
-        styler.to_excel(path, index=False)
-        return path
-    except ImportError:
-        fallback = path.rsplit(".", 1)[0] + ".csv"
-        pdf.to_csv(fallback, index=False)
-        return fallback

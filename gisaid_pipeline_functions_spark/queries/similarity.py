@@ -342,8 +342,8 @@ def sim_ivf_learned(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     # pin the assignment: ivf_topk references the labeled corpus three
-    # times (centroids, routing, search) and each reference would re-run
-    # the whole Lloyd training; the assignment is 2 ints per vector
+    # times (centroids, postings, vector fetch) and each reference would
+    # re-run the whole Lloyd training; the assignment is 2 ints per vector
     cells = (
         kmeans_assign(emb, k=4, iterations=2)
         .select("vec_id", "cell")
@@ -461,10 +461,10 @@ def sim_quantized_rerank(spark, sf_dir):
     """,
 )
 def sim_ivf_multiprobe(spark, sf_dir):
-    from ..operators.similarity import ivf_topk_multiprobe
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk_multiprobe(emb, emb.filter(F.col("vec_id") < 5), k=3, probes=2)
+    return ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=3, probes=2).drop(
+        "cell"
+    )
 
 
 _PQ_CHAINS = (

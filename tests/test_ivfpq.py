@@ -6,7 +6,8 @@ The driver rows (``sim_ivfpq_codes`` / ``sim_ivfpq_adc_search``) prove
 oracle parity; these tests prove the operator semantics independently:
 the ADC search equals a plain-Python replay with CELL-DEPENDENT query
 LUTs (the defining IVF-PQ subtlety), candidates never leave the routed
-cell at probe=1, and probe=2 widens the candidate pool monotonically.
+cell at probe=1, and probe=2 widens the candidate pool monotonically —
+on IVF-PQ and on the label-cell IVF path (``ivf_topk``) alike.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ import math
 from pyspark.sql import functions as F
 
 from gisaid_pipeline_functions_spark.operators.similarity import (
+    ivf_topk,
     ivfpq_adc_topk,
     ivfpq_residual_codes,
 )
@@ -128,6 +130,28 @@ def test_probe2_is_superset_of_probe1_candidates(spark, sf_dir):
     assert set(one) == set(two)
     for k in one:
         assert two[k] <= one[k]
+
+
+def test_ivf_label_probe2_is_superset_of_probe1_candidates(spark, sf_dir):
+    """The label-cell IVF path's ``probes`` knob: with k wide enough to
+    return every probed member, each query's probes=2 candidates strictly
+    contain its probes=1 candidates, and its ranks are dense 1..n."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 5)
+    n = emb.count()
+
+    def ranked(probes):
+        out: dict[int, dict[int, int]] = {}
+        for r in ivf_topk(emb, q, k=n, probes=probes).collect():
+            out.setdefault(r["query_id"], {})[r["cand_id"]] = r["rank"]
+        return out
+
+    one, two = ranked(1), ranked(2)
+    assert set(one) == set(two) == set(range(5))
+    for qid in one:
+        assert set(one[qid]) < set(two[qid])
+        for ranks in (one[qid], two[qid]):
+            assert sorted(ranks.values()) == list(range(1, len(ranks) + 1))
 
 
 def test_every_vector_coded_once_per_subspace(spark, sf_dir):
